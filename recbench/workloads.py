@@ -529,6 +529,7 @@ class IngestMutate:
         path = os.path.join(self.tmp, f"batch-{c}.parquet")
         pq.write_table(batch, path, compression="none")
         nbytes = batch.num_rows * sz["ingest_payload"]
+
         def write():
             self.store.write(ctx.spark.read.parquet(path))
             return nbytes
