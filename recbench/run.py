@@ -5,10 +5,9 @@ per run, timed from outside the engine's package.
     python3 recbench/run.py --workload narrow_query --seed 1 --seconds 8 --trace 0
 
 Run it from the repository root (or any copy of it).  The run builds its
-inputs under a temporary directory inside the checkout, measures whole
-passes of the workload (at least three) until ``--seconds`` have elapsed,
-checks every
-result against DuckDB, deletes its inputs and prints, as its last line,
+inputs under a temporary directory inside the checkout, measures a fixed
+number of whole passes of the workload sized from ``--seconds``, checks
+every result against DuckDB, deletes its inputs and prints, as its last line,
 one JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``.
 With ``--trace 0`` the metrics are the end-to-end ones; with
 ``--trace 1`` the run wraps the engine's entry points in spans and prints
@@ -21,6 +20,7 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import math
 import os
 import platform
 import shutil
@@ -33,12 +33,11 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 # set-up repetitions per run; set-up time is their median
 SETUPS = 3
-# a run measures at least this many whole passes, so that every run's
-# medians come from the same number of passes as the JVM keeps warming
+# a run measures at least this many whole passes
 MIN_PASSES = 3
 
 END_TO_END = {
-    "setup_s": "s", "queries_per_s": "1/s", "pass_s": "s",
+    "setup_s": "s", "query_p50_ms": "ms", "queries_per_s": "1/s",
 }
 
 PER_LAYER = {
@@ -96,7 +95,7 @@ def pin_env(tmp):
         "TMPDIR": os.path.join(tmp, "py-tmp"),
         "PYSPARK_SUBMIT_ARGS": (
             f"--driver-java-options '-Djava.io.tmpdir={tmp}/jvm-tmp "
-            f"-XX:-UsePerfData' pyspark-shell"),
+            f"-Xms{heap_mb}m -XX:-UsePerfData' pyspark-shell"),
     })
     return {"nproc": nproc, "master": f"local[{nproc}]", "shuffle_partitions": nproc,
             "driver_heap_mb": heap_mb, "mem_total_mb": total_mb}
@@ -150,8 +149,8 @@ def end_to_end(rec, session_s, builds):
     lat = query_samples(rec)
     return {
         "setup_s": session_s + median(builds),
+        "query_p50_ms": median(lat) * 1e3,
         "queries_per_s": len(lat) / sum(rec.passes),
-        "pass_s": median(rec.passes),
     }
 
 
@@ -159,8 +158,8 @@ def details(rec, wl):
     """Workload-specific figures for the metadata line."""
     lat = query_samples(rec)
     out = {"read_mb_per_s": rec.bytes / 1e6 / max(sum(lat), 1e-9),
-           "query_p50_ms": pct(lat, 50) * 1e3, "query_p90_ms": pct(lat, 90) * 1e3,
-           "queries": len(lat),
+           "query_p90_ms": pct(lat, 90) * 1e3, "queries": len(lat),
+           "pass_s": median(rec.passes),
            "query_cpu_ms": median(query_samples(rec, rec.cpu)) * 1e3,
            "pass_times_s": rec.passes}
     s = rec.samples
@@ -285,6 +284,7 @@ def per_layer(tracer, rec, wl, session_s):
 
 
 def main(argv=None):
+    t_main = time.perf_counter()
     args = parse_args(argv)
     sys.path.insert(0, ROOT)
     # the engine must be importable from this checkout; outside a full
@@ -305,6 +305,7 @@ def main(argv=None):
             os.rmdir(os.path.dirname(tmp))
         except OSError:
             pass
+    meta["run_wall_s"] = time.perf_counter() - t_main
     print(json.dumps({"meta": meta}, sort_keys=True))
     print(json.dumps(result))
 
@@ -344,20 +345,23 @@ def run(args, tmp, meta):
             wl.setup(i)
             builds.append(time.perf_counter() - t)
         warm = Recorder(ctx.tracer)
+        t = time.perf_counter()
         wl.warmup(warm)
+        warmup_s = time.perf_counter() - t
 
         tracer = Tracer(spark) if args.trace else NullTracer()
         tracer.install()
         ctx.tracer = tracer
         rec = Recorder(tracer)
         cpu0 = cpu_times()
+        # a fixed number of passes, not "until --seconds have passed": a
+        # run on a slow stretch of a shared host would otherwise measure
+        # fewer passes, earlier in the JVM's warm-up, and read slower still
+        passes = max(MIN_PASSES, math.ceil(args.seconds / wl.nominal_pass_s))
         t_start = time.perf_counter()
         try:
-            while True:
+            for _ in range(passes):
                 rec.run_pass(wl)
-                if (len(rec.passes) >= MIN_PASSES
-                        and time.perf_counter() - t_start >= args.seconds):
-                    break
         finally:
             tracer.uninstall()
         wall = time.perf_counter() - t_start
@@ -378,7 +382,7 @@ def run(args, tmp, meta):
             "trace": args.trace, "size": args.size, "data": wl.data,
             "git_sha": sha, "source_sha256": src, "spark": pyspark.__version__,
             "python": platform.python_version(), "measured_wall_s": wall,
-            "session_start_s": session_s, "setup_builds_s": builds,
+            "session_start_s": session_s, "setup_builds_s": builds, "warmup_s": warmup_s,
             "failed_ops_frac": failed / attempted,
             # share of the machine's CPU time taken by the hypervisor while
             # measuring: a noisy-neighbour indicator for this run

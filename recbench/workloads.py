@@ -4,8 +4,11 @@ Each workload is a closed loop with one client: an operation starts only
 after the previous one has returned and its result has been consumed.
 A workload builds its inputs in ``setup`` (called several times; the
 last build is the one measured), then runs whole passes of its operation
-mix.  Every operation's result is checked against DuckDB over the same
-generated rows, outside the timed region.
+mix.  ``nominal_pass_s`` is about how long one warm pass takes at full
+size on 4 cores; a run measures ``ceil(seconds / nominal_pass_s)`` passes,
+so every run of a workload measures the same work.  Every operation's
+result is checked against DuckDB over the same generated rows, outside
+the timed region.
 """
 
 from __future__ import annotations
@@ -257,6 +260,7 @@ class NarrowQuery:
     """Short-window stateless queries: driver-side work dominates."""
 
     name = "narrow_query"
+    nominal_pass_s = 4.5
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -304,11 +308,10 @@ class NarrowQuery:
             rec.bytes += sum(e[2] for e in exp)
 
     def warmup(self, rec):
-        # two passes from the end of the list (a run measures from the
+        # one pass from the end of the list (a run measures from the
         # front): first use of each condition shape loads and compiles
-        # classes on both sides of py4j, and the JIT keeps speeding the
-        # path up through the second pass
-        for q in self.queries[-2 * len(_TEMPLATES):]:
+        # classes on both sides of py4j
+        for q in self.queries[-len(_TEMPLATES):]:
             self._one(rec, q)
 
     def run_pass(self, rec):
@@ -326,6 +329,7 @@ class WideScan:
     executor-side work dominates."""
 
     name = "wide_scan"
+    nominal_pass_s = 5.5
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -478,6 +482,7 @@ class IngestMutate:
     periodic compaction."""
 
     name = "ingest_mutate"
+    nominal_pass_s = 10.0
     entries = ENTRIES[:4]
 
     def __init__(self, ctx):
@@ -611,6 +616,7 @@ class CorpusDedup:
     near-duplicates; bypasses the store and condition layers."""
 
     name = "corpus_dedup"
+    nominal_pass_s = 10.0
 
     def __init__(self, ctx):
         from reductstore_spark import entry_queries as eq
