@@ -13,7 +13,9 @@ Everything is a declarative DataFrame chain: Catalyst pushes the time
 range and state filters into the Parquet scan, the entry-glob filter
 prunes partitions, and ordering happens once at the end (a single
 range-partitioned sort — the distributed equivalent of the reference's
-per-entry k-way merge).
+per-entry k-way merge).  Given an untransformed ``RecordStore.read()``
+and a time range, the scan also prunes the store's ``ts_day``
+partitions to the days the range overlaps.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ from pyspark.sql import functions as F
 from .condition.parser import parse_when
 from .operators.glob import filter_entries, patterns_to_column
 from .plans.planner import plan_parsed
-from .schema import STATE_FINISHED
+from .schema import STATE_FINISHED, day_of
 
 
 class QueryEngine:
@@ -106,28 +108,45 @@ class QueryEngine:
         stop: Optional[int],
         entry_names: Optional[Sequence[str]] = None,
     ) -> DataFrame:
-        df = records
+        """The entry, time-range and state filters as one ``where`` (one
+        eager analysis); over an untransformed ``RecordStore.read()``
+        with a time range, also a scan of only the overlapping days."""
         if entries is not None:
             if entry_names is not None:
                 # registry-backed resolution (mirrors the reference's entry
                 # registry, bucket/query.rs:96-154): the small name list is
                 # already known -> tiny isin filter, prunes partitions
                 selected = filter_entries(entry_names, list(entries))
-                df = df.where(F.col("entry").isin(selected))
+                keep = F.col("entry").isin(selected)
             else:
                 # no registry: compile the glob to a JVM predicate — no
                 # driver round-trip / full entry-column scan per query
-                df = df.where(patterns_to_column(list(entries), F.col("entry")))
+                keep = patterns_to_column(list(entries), F.col("entry"))
         else:
             # wildcard scan: hidden $-entries excluded (entry/system.rs),
             # JVM-side so no driver round-trip
-            df = df.where(~F.col("entry").rlike(r"(^|/)\$"))
+            keep = ~F.col("entry").rlike(r"(^|/)\$")
         # TimeRangeFilter: start inclusive, stop exclusive
         # (filters/time_range.rs:8-40)
+        span = []
         if start is not None:
-            df = df.where(F.col("ts") >= F.lit(int(start)))
+            span.append(f"ts >= {int(start)}")
         if stop is not None:
-            df = df.where(F.col("ts") < F.lit(int(stop)))
+            span.append(f"ts < {int(stop)}")
         # RecordStateFilter: only FINISHED records (historical.rs:81)
-        df = df.where(F.col("state") == F.lit(STATE_FINISHED))
-        return df
+        finished = f"state = {STATE_FINISHED}"
+        tag = vars(records).get("_store_read")
+        # cache()/persist() return the tagged frame itself: a cached read
+        # is served from its cache, not rebuilt from the store
+        if tag is None or not span or records.is_cached:
+            return records.where(keep & F.expr(" AND ".join(span + [finished])))
+        # day pruning: ts_day is a function of ts, so like the entry and
+        # ts filters it tests only shadow-window keys and goes below the
+        # window; the state filter stays above it
+        if start is not None:
+            span.append(f"ts_day >= {day_of(int(start))}")
+        if stop is not None:
+            span.append(f"ts_day <= {day_of(int(stop) - 1)}")
+        return tag.store.view(tag.raw, tag.assume_compacted,
+                              below=keep & F.expr(" AND ".join(span)),
+                              above=F.expr(finished))

@@ -12,10 +12,12 @@ reductstore/src/proto/storage.proto:25-44):
     labels          map<string,string>
     computed_labels map<string,string>  -- extension outputs (@label refs)
 
-Physically: Parquet partitioned by (entry, ts_day).  Parquet row-group
-min/max stats on ``ts`` replace the reference's BlockIndex for pruning
-(storage.proto:79-99); partitioning on a derived day bucket gives
-partition pruning for time-range queries at 100 TB scale.
+Physically (``RecordStore``): Parquet partitioned as
+``bucket=<b>/entry=<e>/ts_day=<d>``, with ``STORE_SCHEMA`` as the on-disk
+table.  Parquet row-group min/max stats on ``ts`` replace the reference's
+BlockIndex for pruning within a day (storage.proto:79-99); the derived
+day bucket gives partition pruning for time-range queries when
+``QueryEngine`` gets an untransformed ``RecordStore.read()``.
 """
 
 from __future__ import annotations
@@ -45,12 +47,35 @@ RECORDS_SCHEMA = StructType([
     StructField("computed_labels", MapType(StringType(), StringType()), False),
 ])
 
+# The RecordStore's on-disk table, field for field as Spark's parquet
+# discovery reads a written store back: the data columns in write order,
+# then the partition columns; every field nullable; ``__seq`` (the write
+# batch) and ``ts_day`` are int.  Reading with it declared costs no
+# schema-inference job.
+STORE_PARTITIONING = ("bucket", "entry", "ts_day")
+STORE_SCHEMA = StructType(
+    [StructField(f.name, f.dataType, True) for f in RECORDS_SCHEMA.fields
+     if f.name not in STORE_PARTITIONING]
+    + [StructField("__seq", IntegerType(), True),
+       StructField("bucket", StringType(), True),
+       StructField("entry", StringType(), True),
+       StructField("ts_day", IntegerType(), True)])
+
 US_PER_DAY = 86_400_000_000
 
 
 def with_partition_cols(df: DataFrame) -> DataFrame:
-    """Add the derived day-bucket partition column used by the store layout."""
+    """Add the store layout's day bucket: ``ts / US_PER_DAY`` in double
+    precision, truncated toward zero (``day_of`` is the same on the
+    driver)."""
     return df.withColumn("ts_day", (F.col("ts") / F.lit(US_PER_DAY)).cast("long"))
+
+
+def day_of(ts: int) -> int:
+    """The ``ts_day`` that ``with_partition_cols`` gives ``ts``: Spark
+    divides in double precision, so ``ts`` is rounded to a double first,
+    then the quotient is truncated toward zero."""
+    return int(float(ts) / US_PER_DAY)
 
 
 def raw_ts_us(df: DataFrame, col: str = "ts"):

@@ -67,17 +67,15 @@ def run_compress_action(store, bucket: str, older_than_us: int, now_us: int,
     """Compact day-partitions entirely older than the cutoff: rewrite
     them (zstd store codec), dropping shadowed row versions and merging
     small append files.  Returns the number of partitions rewritten."""
-    from pyspark.sql import Window
+    from .store import _ranked
 
     cutoff_day = (now_us - older_than_us) // US_PER_DAY
-    raw = store.spark.read.parquet(store.root)
-    old = raw.where((F.col("bucket") == bucket) & (F.col("ts_day") < cutoff_day))
+    old = store._raw().where(
+        (F.col("bucket") == bucket) & (F.col("ts_day") < cutoff_day))
     n_parts = old.select("bucket", "entry", "ts_day").distinct().count()
     if n_parts == 0:
         return 0
-    w = Window.partitionBy("bucket", "entry", "ts").orderBy(F.col("__seq").desc())
-    deduped = (old.withColumn("__rn", F.row_number().over(w))
-               .where(F.col("__rn") == 1).drop("__rn"))
+    deduped = _ranked(old).where(F.col("__rn") == 1).drop("__rn")
     store._overwrite_partitions(deduped)
     if syslog is not None:
         # PR-1470: report both processed record and block counts

@@ -23,14 +23,21 @@ iteration over records — so they scale with executors.
 from __future__ import annotations
 
 import os
-from typing import Optional
+from typing import NamedTuple, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import RECORDS_SCHEMA, US_PER_DAY
+from ..schema import (RECORDS_SCHEMA, STORE_PARTITIONING, STORE_SCHEMA,
+                      with_partition_cols)
 
-_PARTITIONING = ["bucket", "entry", "ts_day"]
+_PARTITIONING = list(STORE_PARTITIONING)
+
+# write(): every stored column cast to its declared on-disk type, so a
+# batch with e.g. a bigint ``state`` still writes files the declared read
+# decodes (``__seq`` is filled in per batch)
+_STORE_COLUMNS = [f"CAST({f.name} AS {f.dataType.simpleString()}) AS {f.name}"
+                  for f in STORE_SCHEMA.fields]
 
 # Spark's ExternalCatalogUtils.escapePathName (Hive FileUtils) char set:
 # ASCII control chars 0x01-0x1F plus these specials; everything else —
@@ -96,31 +103,18 @@ class RecordStore:
             F.length("payload"), F.lit(0)))).collect()[0][0] or 0
 
     def _raw(self) -> DataFrame:
-        """The on-disk table incl. internal columns; a store whose every
-        partition was removed (or that was never written) reads as an
-        empty frame rather than UNABLE_TO_INFER_SCHEMA.
+        """The on-disk table incl. internal columns, read with the
+        declared ``STORE_SCHEMA`` (no schema-inference job).  A store
+        whose every partition was removed reads as an empty frame, and
+        so does one that was never written.
 
-        Only the genuinely-empty case maps to an empty frame: if
-        partition dirs exist, a read failure (transient FS error, corrupt
-        footer) propagates — remove_matched() derives the survivor set
+        A read failure (transient FS error, corrupt footer) propagates
+        when the query runs — remove_matched() derives the survivor set
         from this frame, and an error read as 'empty store' would turn
         into silent partition deletion."""
-        from pyspark.errors import AnalysisException
         if self._exists():
-            try:
-                return self.spark.read.parquet(self.root)
-            except AnalysisException as err:
-                # partition dirs present but no data files (a remove that
-                # emptied every partition): that alone reads as empty
-                cls = err.getCondition() or ""
-                if cls not in ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND"):
-                    raise
-        from pyspark.sql.types import LongType, StructField, StructType
-        schema = StructType(
-            list(RECORDS_SCHEMA.fields)
-            + [StructField("__seq", LongType()),
-               StructField("ts_day", LongType())])
-        return self.spark.createDataFrame([], schema)
+            return self.spark.read.schema(STORE_SCHEMA).parquet(self.root)
+        return self.spark.createDataFrame([], STORE_SCHEMA)
 
     # -- write path ------------------------------------------------------
     def write(self, df: DataFrame, compression: str = None,
@@ -140,11 +134,8 @@ class RecordStore:
         if not _disk_checked:
             self._check_free_disk_space(self._incoming_bytes(df))
         seq = self._next_seq()
-        out = (
-            df.select(*[f.name for f in RECORDS_SCHEMA.fields])
-            .withColumn("__seq", F.lit(seq))
-            .withColumn("ts_day", (F.col("ts") / F.lit(US_PER_DAY)).cast("long"))
-        )
+        out = (with_partition_cols(df.withColumn("__seq", F.lit(seq)))
+               .selectExpr(*_STORE_COLUMNS))
         writer = (out.repartition(*[F.col(c) for c in _PARTITIONING])
                   .write.mode("append"))
         if compression:
@@ -281,16 +272,36 @@ class RecordStore:
         The shadow-dropping window costs a shuffle; after ``compact()``
         (or on ingest paths that never upsert) pass
         ``assume_compacted=True`` to skip it — at scale, run compaction
-        on a schedule and read the fast path."""
+        on a schedule and read the fast path.
+
+        The returned frame carries a ``StoreRead`` tag: given this frame
+        untransformed and a time range, ``QueryEngine`` rebuilds the view
+        over only the day partitions the range overlaps."""
         raw = self._raw()
+        df = self.view(raw, assume_compacted)
+        df._store_read = StoreRead(self, raw, assume_compacted)
+        return df
+
+    def view(self, raw: DataFrame, assume_compacted: bool = False,
+             below: Optional[Column] = None,
+             above: Optional[Column] = None) -> DataFrame:
+        """The live records of ``raw`` (the ``_raw()`` table).  ``below``
+        filters the stored versions before the shadow window drops the
+        older ones, so it may test only the window's keys (bucket,
+        entry, ts, and ts_day, a function of ts); ``above`` filters the
+        live records, so an older version of a record it rejects stays
+        hidden."""
         if assume_compacted:
-            return raw.drop("__seq", "ts_day")
-        w = Window.partitionBy("bucket", "entry", "ts").orderBy(F.col("__seq").desc())
-        return (
-            raw.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", "__seq", "ts_day")
-        )
+            cond = above if below is None else (
+                below if above is None else below & above)
+            live = raw if cond is None else raw.where(cond)
+            return live.drop("__seq", "ts_day")
+        if below is not None:
+            raw = raw.where(below)
+        newest = F.col("__rn") == 1
+        return (_ranked(raw)
+                .where(newest if above is None else newest & above)
+                .drop("__rn", "__seq", "ts_day"))
 
     def entries(self, bucket: Optional[str] = None, include_hidden: bool = False):
         """Distinct (bucket, entry) pairs from partition metadata — a
@@ -313,9 +324,7 @@ class RecordStore:
         if n == 0:
             return 0
         raw = self._raw()
-        affected = keys.withColumn(
-            "ts_day", (F.col("ts") / F.lit(US_PER_DAY)).cast("long")
-        ).select("bucket", "entry", "ts_day").distinct()
+        affected = with_partition_cols(keys).select(*_PARTITIONING).distinct()
         part = raw.join(F.broadcast(affected), _PARTITIONING, "left_semi")
         kept = part.join(F.broadcast(keys), ["bucket", "entry", "ts"], "left_anti")
         # dynamic partition overwrite only replaces partitions PRESENT in
@@ -365,9 +374,7 @@ class RecordStore:
         if keys.count() == 0:
             return 0
         raw = self._raw()
-        affected = keys.withColumn(
-            "ts_day", (F.col("ts") / F.lit(US_PER_DAY)).cast("long")
-        ).select("bucket", "entry", "ts_day").distinct()
+        affected = with_partition_cols(keys).select(*_PARTITIONING).distinct()
         part = raw.join(F.broadcast(affected), _PARTITIONING, "left_semi")
         joined = part.join(F.broadcast(updates), ["bucket", "entry", "ts"], "left")
         merged = (
@@ -562,12 +569,7 @@ class RecordStore:
     def compact(self) -> None:
         """Materialize upserts/deletes: rewrite every partition keeping
         only the newest version per (bucket, entry, ts)."""
-        raw = self._raw()
-        w = Window.partitionBy("bucket", "entry", "ts").orderBy(F.col("__seq").desc())
-        deduped = (
-            raw.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1).drop("__rn")
-        )
+        deduped = _ranked(self._raw()).where(F.col("__rn") == 1).drop("__rn")
         self._overwrite_partitions(deduped)
 
     def evict_fifo(self, bucket: str, quota_bytes: int) -> int:
@@ -602,3 +604,20 @@ class RecordStore:
                 )
                 out.append((dirpath, day, size))
         return out
+
+
+class StoreRead(NamedTuple):
+    """The tag on a ``RecordStore.read()`` frame: the store, the raw
+    relation its view is built over, and the read mode."""
+    store: RecordStore
+    raw: DataFrame
+    assume_compacted: bool
+
+
+def _ranked(raw: DataFrame) -> DataFrame:
+    """``raw`` with ``__rn``: 1 for the newest version (highest
+    ``__seq``) of each (bucket, entry, ts), the shadow window's key.
+    SQL text: a fraction of the py4j calls of the Column-built window."""
+    return raw.selectExpr(
+        "*", "row_number() OVER (PARTITION BY bucket, entry, ts "
+        "ORDER BY __seq DESC) AS __rn")

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..condition.ast import is_stateful
 from ..condition.parser import parse_when
 from ..plans.planner import _predicate
-from ..schema import RECORDS_SCHEMA, STATE_FINISHED
+from ..schema import STATE_FINISHED, STORE_SCHEMA
 
 
 def continuous_query(
@@ -42,7 +42,7 @@ def continuous_query(
     writer within each batch)."""
     reader = (
         spark.readStream
-        .schema(_store_schema())
+        .schema(STORE_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(store_root)
     )
@@ -85,16 +85,6 @@ def continuous_query(
             from ..plans.planner import _select_labels
             df = _select_labels(df, directives)
     return df
-
-
-def _store_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return StructType(
-        list(RECORDS_SCHEMA.fields)
-        + [StructField("__seq", LongType(), True),
-           StructField("ts_day", LongType(), True)]
-    )
 
 
 def run_to_memory(stream_df: DataFrame, name: str, timeout: int = 120):

@@ -520,3 +520,121 @@ def test_gate_entry_reinvocation_builds_fresh_plan(spark, sf_dir):
     assert df1 is not df2  # fresh plan per call, not a cached frame
     assert sorted(map(tuple, df1.collect())) == \
         sorted(map(tuple, df2.collect()))
+
+
+def test_declared_schema_and_write_casts(spark, store):
+    """_raw() reads with STORE_SCHEMA: the same schema for a store never
+    written, a written one and one a remove emptied, and the schema
+    Spark infers from the files.  A batch with non-canonical numeric
+    types (int ts, bigint state) is stored as the declared types, so
+    the declared read decodes it."""
+    from reductstore_spark.schema import STORE_SCHEMA
+
+    assert store._raw().schema == STORE_SCHEMA
+    odd = SCHEMA.replace("ts long", "ts int").replace("state int", "state bigint")
+    store.write(spark.createDataFrame(mk_rows("e1", 3), odd))
+    assert spark.read.parquet(store.root).schema == STORE_SCHEMA
+    assert store._raw().schema == STORE_SCHEMA
+    got = sorted((r["ts"], r["state"], r["labels"]["a"])
+                 for r in store.read().collect())
+    assert got == [(0, 1, "0"), (1_000_000, 1, "1"), (2_000_000, 1, "2")]
+    store.remove_matched(store.read())
+    assert store._raw().count() == 0
+    assert store._raw().schema == STORE_SCHEMA
+
+
+_I64 = 2 ** 63
+
+
+def _ts_cases():
+    from hypothesis import strategies as st
+    from reductstore_spark.schema import US_PER_DAY
+
+    # |k| <= 10^8 days keeps k * US_PER_DAY ± 1 inside the long range
+    boundary = st.builds(lambda k, d: k * US_PER_DAY + d,
+                         st.integers(-10 ** 8, 10 ** 8),
+                         st.sampled_from([-1, 0, 1]))
+    return st.one_of(
+        st.integers(-_I64, _I64 - 1),
+        st.integers(-(2 ** 53), 0),
+        st.integers(2 ** 53, _I64 - 1),
+        boundary)
+
+
+def test_day_of_matches_spark_ts_day(spark):
+    """The driver's day bound (day_of) equals Spark's ts_day on negative
+    timestamps, day boundaries ±1 µs and timestamps ≥ 2^53."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+    from reductstore_spark.schema import day_of, with_partition_cols
+
+    # few examples of many timestamps: one Spark job per example
+    @settings(max_examples=4, deadline=None)
+    @given(st.lists(_ts_cases(), min_size=1, max_size=256))
+    def check(tss):
+        rows = with_partition_cols(
+            spark.createDataFrame([(t,) for t in tss], "ts long")).collect()
+        assert [r["ts_day"] for r in rows] == [day_of(t) for t in tss]
+
+    check()
+
+
+def test_time_range_prunes_days_of_an_untransformed_read(spark, store):
+    """An untransformed read() (0 Spark jobs) with a time range scans
+    only the days the range overlaps: ts_day is a partition filter, and
+    the query succeeds with every other day's files unreadable.  The
+    day filter sits below the shadow window and the state filter above
+    it, so a newer non-FINISHED version keeps the older FINISHED one
+    hidden.  A transformed read returns the same rows, unpruned, and a
+    cached read is served from its cache."""
+    import glob
+
+    day = 86_400_000_000
+    store.write(spark.createDataFrame(
+        [r for d in range(3) for r in mk_rows("e1", 3, base=d * day)], SCHEMA))
+    store.write(spark.createDataFrame(
+        [("b1", "e1", day, None, "", 0, {"a": "new"}, {})], SCHEMA))
+    sc = spark.sparkContext
+    sc.setJobGroup("store_read_jobs", "read() runs no job")
+    try:
+        plain, compacted = store.read(), store.read(assume_compacted=True)
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "store_read_jobs")) == []
+    finally:
+        sc.setJobGroup("", "")
+    qe = QueryEngine()
+    plan = qe.query(plain, entries=["e1"], start=day, stop=2 * day) \
+        ._jdf.queryExecution().sparkPlan().toString()
+    part_filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "ts_day" in part_filters, plan
+    cached = store.read().persist()
+    try:
+        plan = qe.query(cached, entries=["e1"], start=day, stop=2 * day) \
+            ._jdf.queryExecution().sparkPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+    finally:
+        cached.unpersist()
+
+    def ts(df, start, stop):
+        got = qe.query(df, entries=["e1"], start=start, stop=stop).collect()
+        return [r["ts"] for r in got if day <= r["ts"] < 2 * day]
+
+    live = [day + 1_000_000, day + 2_000_000]
+    assert ts(plain.where(F.col("bucket") == "b1"), day, 2 * day) == live
+    assert ts(plain, day, None) == live
+    others = [f for f in glob.glob(store.root + "/**/*.parquet", recursive=True)
+              if "ts_day=1" not in f]
+    saved = {f: open(f, "rb").read() for f in others}
+    try:
+        for f in others:
+            with open(f, "wb") as fh:
+                fh.write(b"not a parquet file")
+        assert ts(plain, day, 2 * day) == live
+        # compacted mode trusts there are no shadows: the older version
+        assert ts(compacted, day, 2 * day) == [day] + live
+        with pytest.raises(Exception):
+            ts(plain.where(F.lit(True)), day, 2 * day)
+    finally:
+        for f, data in saved.items():
+            with open(f, "wb") as fh:
+                fh.write(data)
