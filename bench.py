@@ -20,6 +20,17 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def _git_sha(root: str):
+    """The checkout's commit, or None outside a git history."""
+    import subprocess
+    try:
+        out = subprocess.run(["git", "rev-parse", "HEAD"], cwd=root,
+                             capture_output=True, text=True, timeout=10)
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out.stdout.strip() or None
+
+
 def main() -> None:
     # --out <path>: where to write the full-precision artifact.  Default
     # stays BENCH_LOCAL.json (the committed sf0.1 baseline) — sf1/soak
@@ -106,7 +117,10 @@ def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     out_name = os.path.basename(out_path) if out_path else "BENCH_LOCAL.json"
     with open(out_path or os.path.join(here, "BENCH_LOCAL.json"), "w") as fh:
-        json.dump(result, fh, indent=1)
+        # the artifact also names the machine's share and the code it
+        # measured (the printed line stays as it is)
+        json.dump({**result, "cpus": int(cpus), "git_sha": _git_sha(here)},
+                  fh, indent=1)
 
     # The driver keeps only the LAST ~2000 chars of stdout; the previous
     # full-precision single line exceeded that, got its HEAD cut, and

@@ -11,15 +11,22 @@ plus the query-driven mutations: count, remove-query, label updates.
 
 Everything is a declarative DataFrame chain: Catalyst pushes the time
 range and state filters into the Parquet scan, the entry-glob filter
-prunes partitions, and ordering happens once at the end (a single
-range-partitioned sort — the distributed equivalent of the reference's
-per-entry k-way merge).  Given an untransformed ``RecordStore.read()``
+prunes partitions, and ordering happens once at the end, as one global
+sort on (ts, entry) — the distributed equivalent of the reference's
+per-entry k-way merge.  Given an untransformed ``RecordStore.read()``
 and a time range, the scan also prunes the store's ``ts_day``
-partitions to the days the range overlaps.
+partitions to the days the range overlaps.  If those files fit in one
+of Spark's file splits, by the rule Spark packs splits with (the sum of
+each file's size plus ``spark.sql.files.openCostInBytes`` is at most
+``spark.sql.files.maxPartitionBytes``), the scan reads them as one
+partition: the whole query, sort included, then runs as one task in one
+job.  Any other scan sorts by range partitioning (a sampling job and a
+shuffle).
 """
 
 from __future__ import annotations
 
+import re
 from typing import Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
@@ -92,11 +99,12 @@ class QueryEngine:
                  ts: Optional[int] = None) -> DataFrame:
         """Single-record read (api/http/entry/read_single.rs): exact
         timestamp when given, else the latest FINISHED record."""
+        if ts is not None:
+            return self._scan(records, [entry], int(ts), int(ts) + 1,
+                              entry_names=[entry], bucket=bucket).limit(1)
         df = records.where(
             (F.col("bucket") == bucket) & (F.col("entry") == entry)
             & (F.col("state") == STATE_FINISHED))
-        if ts is not None:
-            return df.where(F.col("ts") == F.lit(int(ts))).limit(1)
         return df.orderBy(F.col("ts").desc()).limit(1)
 
     # -- internals -------------------------------------------------------
@@ -107,10 +115,12 @@ class QueryEngine:
         start: Optional[int],
         stop: Optional[int],
         entry_names: Optional[Sequence[str]] = None,
+        bucket: Optional[str] = None,
     ) -> DataFrame:
         """The entry, time-range and state filters as one ``where`` (one
         eager analysis); over an untransformed ``RecordStore.read()``
-        with a time range, also a scan of only the overlapping days."""
+        with a time range, also a scan of only the overlapping days, in
+        one task when their files fit in one of Spark's file splits."""
         if entries is not None:
             if entry_names is not None:
                 # registry-backed resolution (mirrors the reference's entry
@@ -126,6 +136,8 @@ class QueryEngine:
             # wildcard scan: hidden $-entries excluded (entry/system.rs),
             # JVM-side so no driver round-trip
             keep = ~F.col("entry").rlike(r"(^|/)\$")
+        if bucket is not None:
+            keep = keep & (F.col("bucket") == bucket)
         # TimeRangeFilter: start inclusive, stop exclusive
         # (filters/time_range.rs:8-40)
         span = []
@@ -147,6 +159,21 @@ class QueryEngine:
             span.append(f"ts_day >= {day_of(int(start))}")
         if stop is not None:
             span.append(f"ts_day <= {day_of(int(stop) - 1)}")
+        # a scan that fits in one file split reads as one partition: the
+        # window, the condition and the final (ts, entry) sort then run
+        # in one task, with no sampling job and no shuffle
+        conf = tag.store.spark.conf
+        limit = _bytes(conf.get("spark.sql.files.maxPartitionBytes"))
+        size = tag.store.scan_bytes(
+            entries, start, stop, bucket, limit=limit,
+            file_cost=_bytes(conf.get("spark.sql.files.openCostInBytes")))
         return tag.store.view(tag.raw, tag.assume_compacted,
                               below=keep & F.expr(" AND ".join(span)),
-                              above=F.expr(finished))
+                              above=F.expr(finished), one_task=size <= limit)
+
+
+def _bytes(setting: str) -> int:
+    """A Spark byte-size setting ("4m", "512kb", "134217728b") in bytes:
+    binary units, no suffix meaning bytes (JavaUtils.byteStringAsBytes)."""
+    num, unit = re.fullmatch(r"(\d+)([kmgtp]?)b?", setting.strip().lower()).groups()
+    return int(num) << 10 * " kmgtp".index(unit or " ")

@@ -23,13 +23,15 @@ iteration over records — so they scale with executors.
 from __future__ import annotations
 
 import os
-from typing import NamedTuple, Optional
+import re
+from typing import NamedTuple, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.glob import filter_entries
 from ..schema import (RECORDS_SCHEMA, STORE_PARTITIONING, STORE_SCHEMA,
-                      with_partition_cols)
+                      day_of, with_partition_cols)
 
 _PARTITIONING = list(STORE_PARTITIONING)
 
@@ -51,6 +53,25 @@ def _escape_path_name(s: str) -> str:
     if not s:
         return "__HIVE_DEFAULT_PARTITION__"
     return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPE else c for c in s)
+
+
+def _unescape_path_name(s: str) -> str:
+    """The inverse of ``_escape_path_name``."""
+    if s == "__HIVE_DEFAULT_PARTITION__":
+        return ""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s)
+
+
+def _partition_dirs(path: str, key: str) -> dict:
+    """{value: dir} of the ``<key>=<value>`` partition directories under
+    ``path`` (values unescaped; none when ``path`` does not exist)."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return {}
+    prefix = key + "="
+    return {_unescape_path_name(n[len(prefix):]): os.path.join(path, n)
+            for n in names if n.startswith(prefix)}
 
 
 class InsufficientStorage(Exception):
@@ -284,24 +305,59 @@ class RecordStore:
 
     def view(self, raw: DataFrame, assume_compacted: bool = False,
              below: Optional[Column] = None,
-             above: Optional[Column] = None) -> DataFrame:
+             above: Optional[Column] = None,
+             one_task: bool = False) -> DataFrame:
         """The live records of ``raw`` (the ``_raw()`` table).  ``below``
         filters the stored versions before the shadow window drops the
         older ones, so it may test only the window's keys (bucket,
         entry, ts, and ts_day, a function of ts); ``above`` filters the
         live records, so an older version of a record it rejects stays
-        hidden."""
-        if assume_compacted:
-            cond = above if below is None else (
-                below if above is None else below & above)
-            live = raw if cond is None else raw.where(cond)
-            return live.drop("__seq", "ts_day")
+        hidden.  ``one_task`` reads the filtered versions as one
+        partition, so the window and everything above it need no
+        exchange."""
+        if assume_compacted and above is not None:
+            # no window: both filters test the same rows
+            below, above = above if below is None else below & above, None
         if below is not None:
             raw = raw.where(below)
+        if one_task:
+            raw = raw.coalesce(1)
+        if assume_compacted:
+            return raw.drop("__seq", "ts_day")
         newest = F.col("__rn") == 1
         return (_ranked(raw)
                 .where(newest if above is None else newest & above)
                 .drop("__rn", "__seq", "ts_day"))
+
+    def scan_bytes(self, entries: Optional[Sequence[str]] = None,
+                   start: Optional[int] = None, stop: Optional[int] = None,
+                   bucket: Optional[str] = None, file_cost: int = 0,
+                   limit: Optional[int] = None) -> int:
+        """Bytes on disk a scan of ``[start, stop)`` reads: the files of
+        the ``ts_day`` partitions the range overlaps, of the entries the
+        patterns ``entries`` select (``filter_entries``, as the scan
+        filter resolves them; hidden entries only by exact name), in
+        every bucket or in ``bucket``.  Each file counts its size plus
+        ``file_cost``; the walk stops once the sum passes ``limit``.
+        Files Spark skips (``_``/``.``-prefixed) are not counted."""
+        lo = float("-inf") if start is None else day_of(int(start))
+        hi = float("inf") if stop is None else day_of(int(stop) - 1)
+        total = 0
+        for b, bdir in _partition_dirs(self.root, "bucket").items():
+            if bucket not in (None, b):
+                continue
+            names = _partition_dirs(bdir, "entry")
+            for name in filter_entries(names, entries):
+                for day, ddir in _partition_dirs(names[name], "ts_day").items():
+                    if not lo <= int(day) <= hi:
+                        continue
+                    for f in _listdir(ddir):
+                        if f.name.startswith(("_", ".")):
+                            continue
+                        total += f.stat().st_size + file_cost
+                        if limit is not None and total > limit:
+                            return total
+        return total
 
     def entries(self, bucket: Optional[str] = None, include_hidden: bool = False):
         """Distinct (bucket, entry) pairs from partition metadata — a
@@ -496,15 +552,12 @@ class RecordStore:
                       F.min("ts").alias("lo"),
                       F.max("ts").alias("hi")).collect()[0]
         size = files = 0
-        broot = os.path.join(self.root, f"bucket={bucket}")
-        candidates = {f"entry={_escape_path_name(entry)}"}
-        for dirpath, _dirnames, filenames in os.walk(broot):
-            parts = dirpath[len(broot):].split(os.sep)
-            if any(p in candidates for p in parts):
-                pq = [f for f in filenames if f.endswith(".parquet")]
-                files += len(pq)
-                size += sum(os.path.getsize(os.path.join(dirpath, f))
-                            for f in pq)
+        edir = _partition_dirs(os.path.join(self.root, f"bucket={bucket}"),
+                               "entry").get(entry)
+        for ddir in _partition_dirs(edir, "ts_day").values() if edir else ():
+            pq = [f for f in _listdir(ddir) if f.name.endswith(".parquet")]
+            files += len(pq)
+            size += sum(f.stat().st_size for f in pq)
         # no-records entries report 0/0, never null (entry.rs:222-238
         # unwrap_or(0); PR-1534 pins the same for the bucket rollup)
         return {"name": entry, "size": size, "record_count": row["n"],
@@ -592,18 +645,25 @@ class RecordStore:
     def _bucket_days(self, bucket: str):
         out = []
         broot = os.path.join(self.root, f"bucket={bucket}")
-        for dirpath, _dirnames, filenames in os.walk(broot):
-            if "ts_day=" in os.path.basename(dirpath):
-                # system $meta entries are exempt from quota eviction
-                # (entry/system.rs; '/' is %-escaped in partition dirs)
-                if "%24meta" in dirpath or "$meta" in dirpath:
-                    continue
-                day = int(os.path.basename(dirpath).split("=", 1)[1])
-                size = sum(
-                    os.path.getsize(os.path.join(dirpath, f)) for f in filenames
-                )
-                out.append((dirpath, day, size))
+        for entry, edir in _partition_dirs(broot, "entry").items():
+            # system $meta entries are exempt from quota eviction
+            # (entry/system.rs)
+            if "$meta" in entry:
+                continue
+            for day, ddir in _partition_dirs(edir, "ts_day").items():
+                size = sum(f.stat().st_size for f in _listdir(ddir))
+                out.append((ddir, int(day), size))
         return out
+
+
+def _listdir(path: str) -> list:
+    """The files in ``path`` (``os.DirEntry``s; none when ``path`` does
+    not exist)."""
+    try:
+        with os.scandir(path) as it:
+            return [f for f in it if f.is_file()]
+    except FileNotFoundError:
+        return []
 
 
 class StoreRead(NamedTuple):

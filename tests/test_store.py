@@ -405,7 +405,8 @@ def test_escape_path_name_matches_spark_exactly(spark, tmp_path):
     ('a b/c', 'x$:y') previously matched neither all-quoted nor raw
     spellings, so emptied partitions survived (round-3 ADVICE)."""
     import os
-    from reductstore_spark.sources.store import _escape_path_name
+    from reductstore_spark.sources.store import (_escape_path_name,
+                                                 _unescape_path_name)
 
     hostile = ["plain", "a b/c", "x$:y", "pct%20", "q?mark", "h#ash",
                "br[ack]ets", "back\\slash", "st*ar", 'quo"te', "un~der",
@@ -417,6 +418,7 @@ def test_escape_path_name_matches_spark_exactly(spark, tmp_path):
     on_disk = {d for d in os.listdir(root) if d.startswith("entry=")}
     expect = {f"entry={_escape_path_name(e)}" for e in hostile}
     assert on_disk == expect
+    assert {_unescape_path_name(d[len("entry="):]) for d in on_disk} == set(hostile)
 
 
 def test_remove_matched_deletes_emptied_hostile_partition(spark, tmp_path):
@@ -586,14 +588,19 @@ def test_time_range_prunes_days_of_an_untransformed_read(spark, store):
     day filter sits below the shadow window and the state filter above
     it, so a newer non-FINISHED version keeps the older FINISHED one
     hidden.  A transformed read returns the same rows, unpruned, and a
-    cached read is served from its cache."""
+    cached read is served from its cache.  Pruned files that fit in one
+    file split are read as one partition: the query runs one job with
+    no exchange, until maxPartitionBytes is lowered below them."""
     import glob
+    import itertools
 
     day = 86_400_000_000
     store.write(spark.createDataFrame(
-        [r for d in range(3) for r in mk_rows("e1", 3, base=d * day)], SCHEMA))
+        [r for d in range(3) for e in ("e1", "e2")
+         for r in mk_rows(e, 3, base=d * day)], SCHEMA))
     store.write(spark.createDataFrame(
-        [("b1", "e1", day, None, "", 0, {"a": "new"}, {})], SCHEMA))
+        [("b1", "e1", day, None, "", 0, {"a": "new"}, {}),
+         ("b1", "e2", 2 * day, None, "", 1, {"a": "upserted"}, {})], SCHEMA))
     sc = spark.sparkContext
     sc.setJobGroup("store_read_jobs", "read() runs no job")
     try:
@@ -610,10 +617,52 @@ def test_time_range_prunes_days_of_an_untransformed_read(spark, store):
     cached = store.read().persist()
     try:
         plan = qe.query(cached, entries=["e1"], start=day, stop=2 * day) \
-            ._jdf.queryExecution().sparkPlan().toString()
+            ._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan, plan
+        assert "Exchange rangepartitioning" in plan, plan
     finally:
         cached.unpersist()
+
+    groups = itertools.count()
+
+    def run(df):
+        """(rows, jobs, executed plan) of collecting ``df``."""
+        group = f"one_task_{next(groups)}"
+        sc.setJobGroup(group, "pruned query")
+        try:
+            rows = [(r["entry"], r["ts"], r["labels"]) for r in df.collect()]
+        finally:
+            sc.setJobGroup("", "")
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return rows, jobs, df._jdf.queryExecution().executedPlan().toString()
+
+    # across the day-1/day-2 boundary, with e1's newest version of ts=day
+    # not FINISHED and e2's ts=2*day upserted by a belated write
+    span = dict(entries=["e*"], start=day, stop=2 * day + 2_000_000)
+    each_n = dict(span, when={"$each_n": 2})
+    want, _, unpruned = run(qe.query(plain.where(F.lit(True)), **span))
+    assert "Exchange rangepartitioning" in unpruned, unpruned
+    assert [(e, t) for e, t, _ in want] == [
+        ("e2", day), ("e1", day + 1_000_000), ("e2", day + 1_000_000),
+        ("e1", day + 2_000_000), ("e2", day + 2_000_000),
+        ("e1", 2 * day), ("e2", 2 * day), ("e1", 2 * day + 1_000_000),
+        ("e2", 2 * day + 1_000_000)]
+    assert want[6][2] == {"a": "upserted"}
+    for read in (plain, compacted):
+        for query in (span, each_n):
+            expect = run(qe.query(read.where(F.lit(True)), **query))[0]
+            rows, jobs, executed = run(qe.query(read, **query))
+            assert rows == expect and jobs == 1, (query, rows, jobs)
+            assert "Exchange" not in executed, executed
+    key = "spark.sql.files.maxPartitionBytes"
+    saved_limit = spark.conf.get(key)
+    spark.conf.set(key, "1m")  # below 4 files + openCostInBytes (512k) each
+    try:
+        rows, jobs, executed = run(qe.query(plain, **span))
+    finally:
+        spark.conf.set(key, saved_limit)
+    assert rows == want and jobs > 1
+    assert "Exchange rangepartitioning" in executed, executed
 
     def ts(df, start, stop):
         got = qe.query(df, entries=["e1"], start=start, stop=stop).collect()
@@ -638,3 +687,58 @@ def test_time_range_prunes_days_of_an_untransformed_read(spark, store):
         for f, data in saved.items():
             with open(f, "wb") as fh:
                 fh.write(data)
+
+
+def test_scan_bytes_counts_exactly_the_selected_days_files(spark, tmp_path):
+    """scan_bytes, the size test of the one-task scan, sums the parquet
+    files of exactly the entries filter_entries selects (names that need
+    escaping, hidden entries only by exact name) in exactly the days the
+    range overlaps; an under-count would put a large scan in one task."""
+    import glob
+    import os
+    from urllib.parse import unquote
+
+    from reductstore_spark.query import _bytes
+
+    day = 86_400_000_000
+    names = ["a b", "x=y", "50%", "cam/front", "x/$meta", "e1"]
+    store = RecordStore(spark, str(tmp_path / "sized"))
+    store.write(spark.createDataFrame(
+        [r for d in range(3) for e in names
+         for r in mk_rows(e, 2, base=d * day)]
+        + [("b2", "a b", 0, b"x", "", 1, {}, {})], SCHEMA))
+    files = []
+    for f in glob.glob(store.root + "/bucket=*/entry=*/ts_day=*/*.parquet"):
+        b, e, d = (unquote(p.split("=", 1)[1]) for p in f.split(os.sep)[-4:-1])
+        files.append((b, e, int(d), os.path.getsize(f)))
+    assert {(b, e, d) for b, e, d, _ in files} == (
+        {("b1", e, d) for e in names for d in range(3)} | {("b2", "a b", 0)})
+
+    def on_disk(selected, lo=0, hi=2, bucket=None):
+        return sum(n for b, e, d, n in files
+                   if e in selected and lo <= d <= hi and bucket in (None, b))
+
+    visible = set(names) - {"x/$meta"}
+    assert store.scan_bytes() == store.scan_bytes(["*"]) == on_disk(visible)
+    assert store.scan_bytes(["a b", "x=y", "50%", "cam/front"], day, 2 * day) \
+        == on_disk({"a b", "x=y", "50%", "cam/front"}, 1, 1)
+    assert store.scan_bytes(["cam/*", "50%"], day - 1, day + 1) \
+        == on_disk({"cam/front", "50%"}, 0, 1)
+    assert store.scan_bytes(["x/*"]) == 0
+    assert store.scan_bytes(["x/$meta"]) == on_disk({"x/$meta"})
+    assert store.scan_bytes(["*", "!x=y"], start=day) == on_disk(visible - {"x=y"}, 1)
+    assert store.scan_bytes(["a b"], stop=day) == on_disk({"a b"}, 0, 0)
+    assert store.scan_bytes(["a b"], bucket="b1") == on_disk({"a b"}, bucket="b1")
+    assert store.scan_bytes(["a b"], bucket="b3") == 0
+    assert store.scan_bytes(["e1"], file_cost=7) == on_disk({"e1"}) + 3 * 7
+    total = store.scan_bytes()
+    assert 1 < store.scan_bytes(limit=1) < total
+    assert [_bytes(s) for s in ("134217728b", "4m", "512k", "2kb", "7")] \
+        == [128 << 20, 4 << 20, 512 << 10, 2048, 7]
+
+    assert RecordStore(spark, str(tmp_path / "never")).scan_bytes() == 0
+    emptied = RecordStore(spark, str(tmp_path / "emptied"))
+    emptied.write(spark.createDataFrame(mk_rows("a b", 2), SCHEMA))
+    assert emptied.scan_bytes(["a b"]) > 0
+    emptied.remove_matched(emptied.read())
+    assert emptied.scan_bytes(["a b"]) == emptied.scan_bytes() == 0
