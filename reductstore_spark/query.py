@@ -15,13 +15,12 @@ prunes partitions, and ordering happens once at the end, as one global
 sort on (ts, entry) — the distributed equivalent of the reference's
 per-entry k-way merge.  Given an untransformed ``RecordStore.read()``
 and a time range, the scan also prunes the store's ``ts_day``
-partitions to the days the range overlaps.  If those files fit in one
-of Spark's file splits, by the rule Spark packs splits with (the sum of
-each file's size plus ``spark.sql.files.openCostInBytes`` is at most
-``spark.sql.files.maxPartitionBytes``), the scan reads them as one
-partition: the whole query, sort included, then runs as one task in one
-job.  Any other scan sorts by range partitioning (a sampling job and a
-shuffle).
+partitions to the days the range overlaps.  If those files are small —
+the sum of each file's size plus ``spark.sql.files.openCostInBytes`` is
+at most ``spark.sql.files.maxPartitionBytes`` and at most
+``ONE_TASK_BYTES`` — the scan reads them as one partition: the whole
+query, sort included, then runs as one task in one job.  Any other scan
+sorts by range partitioning (a sampling job and a shuffle).
 """
 
 from __future__ import annotations
@@ -36,6 +35,14 @@ from .condition.parser import parse_when
 from .operators.glob import filter_entries, patterns_to_column
 from .plans.planner import plan_parsed
 from .schema import STATE_FINISHED, day_of
+
+# The largest day-pruned scan (file bytes plus openCostInBytes per file)
+# read as one task.  Spark would split even a small scan over the cores;
+# one task skips the range sort's sampling job and shuffle but gives up
+# that parallelism.  Measured on a 4-core VM (tools/one_task_size.py), one
+# task was faster in every query shape up to 7 MiB, broke even around
+# 14-28 MiB and lost above.
+ONE_TASK_BYTES = 8 << 20
 
 
 class QueryEngine:
@@ -120,7 +127,7 @@ class QueryEngine:
         """The entry, time-range and state filters as one ``where`` (one
         eager analysis); over an untransformed ``RecordStore.read()``
         with a time range, also a scan of only the overlapping days, in
-        one task when their files fit in one of Spark's file splits."""
+        one task when their files are small."""
         if entries is not None:
             if entry_names is not None:
                 # registry-backed resolution (mirrors the reference's entry
@@ -159,17 +166,19 @@ class QueryEngine:
             span.append(f"ts_day >= {day_of(int(start))}")
         if stop is not None:
             span.append(f"ts_day <= {day_of(int(stop) - 1)}")
-        # a scan that fits in one file split reads as one partition: the
-        # window, the condition and the final (ts, entry) sort then run
-        # in one task, with no sampling job and no shuffle
+        # a small scan reads as one partition: the window, the condition
+        # and the final (ts, entry) sort then run in one task, with no
+        # sampling job and no shuffle
         conf = tag.store.spark.conf
-        limit = _bytes(conf.get("spark.sql.files.maxPartitionBytes"))
+        limit = min(ONE_TASK_BYTES,
+                    _bytes(conf.get("spark.sql.files.maxPartitionBytes")))
         size = tag.store.scan_bytes(
             entries, start, stop, bucket, limit=limit,
             file_cost=_bytes(conf.get("spark.sql.files.openCostInBytes")))
-        return tag.store.view(tag.raw, tag.assume_compacted,
+        raw = tag.raw.coalesce(1) if size <= limit else tag.raw
+        return tag.store.view(raw, tag.assume_compacted,
                               below=keep & F.expr(" AND ".join(span)),
-                              above=F.expr(finished), one_task=size <= limit)
+                              above=F.expr(finished))
 
 
 def _bytes(setting: str) -> int:

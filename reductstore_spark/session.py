@@ -41,20 +41,6 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     )
 
 
-def default_driver_memory() -> str:
-    """A quarter of this host's physical memory, at most 16 GiB.
-
-    The JVM grows its heap toward ``-Xmx`` before it collects, so a heap
-    as large as the host leaves nothing for the Python workers, a second
-    session or other processes, and the kernel kills the driver instead.
-    """
-    try:
-        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (ValueError, OSError):
-        return "16g"
-    return f"{max(1024, min(16 << 10, (total // 4) >> 20))}m"
-
-
 def get_session(app_name: str = "reductstore-spark", master: str | None = None,
                 shuffle_partitions: int | None = None) -> SparkSession:
     """Local-mode session for tests/bench; cluster deployments call
@@ -73,7 +59,7 @@ def get_session(app_name: str = "reductstore-spark", master: str | None = None,
     # not configure()).
     builder = builder.config("spark.sql.files.maxPartitionBytes", "4m")
     builder = builder.config("spark.sql.files.openCostInBytes", "512k")
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()))
+    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     # the UI listener bus lags badly across many small jobs (benchmark
     # pattern) and causes multi-second stalls; headless anyway
     builder = builder.config("spark.ui.enabled", "false")

@@ -305,25 +305,20 @@ class RecordStore:
 
     def view(self, raw: DataFrame, assume_compacted: bool = False,
              below: Optional[Column] = None,
-             above: Optional[Column] = None,
-             one_task: bool = False) -> DataFrame:
+             above: Optional[Column] = None) -> DataFrame:
         """The live records of ``raw`` (the ``_raw()`` table).  ``below``
         filters the stored versions before the shadow window drops the
         older ones, so it may test only the window's keys (bucket,
         entry, ts, and ts_day, a function of ts); ``above`` filters the
         live records, so an older version of a record it rejects stays
-        hidden.  ``one_task`` reads the filtered versions as one
-        partition, so the window and everything above it need no
-        exchange."""
-        if assume_compacted and above is not None:
-            # no window: both filters test the same rows
-            below, above = above if below is None else below & above, None
+        hidden."""
+        if assume_compacted:
+            cond = above if below is None else (
+                below if above is None else below & above)
+            live = raw if cond is None else raw.where(cond)
+            return live.drop("__seq", "ts_day")
         if below is not None:
             raw = raw.where(below)
-        if one_task:
-            raw = raw.coalesce(1)
-        if assume_compacted:
-            return raw.drop("__seq", "ts_day")
         newest = F.col("__rn") == 1
         return (_ranked(raw)
                 .where(newest if above is None else newest & above)

@@ -581,7 +581,8 @@ def test_day_of_matches_spark_ts_day(spark):
     check()
 
 
-def test_time_range_prunes_days_of_an_untransformed_read(spark, store):
+def test_time_range_prunes_days_of_an_untransformed_read(spark, store,
+                                                        monkeypatch):
     """An untransformed read() (0 Spark jobs) with a time range scans
     only the days the range overlaps: ts_day is a partition filter, and
     the query succeeds with every other day's files unreadable.  The
@@ -590,9 +591,12 @@ def test_time_range_prunes_days_of_an_untransformed_read(spark, store):
     hidden.  A transformed read returns the same rows, unpruned, and a
     cached read is served from its cache.  Pruned files that fit in one
     file split are read as one partition: the query runs one job with
-    no exchange, until maxPartitionBytes is lowered below them."""
+    no exchange, until maxPartitionBytes or the one-task ceiling is
+    lowered below them."""
     import glob
     import itertools
+
+    from reductstore_spark import query as query_module
 
     day = 86_400_000_000
     store.write(spark.createDataFrame(
@@ -654,15 +658,21 @@ def test_time_range_prunes_days_of_an_untransformed_read(spark, store):
             rows, jobs, executed = run(qe.query(read, **query))
             assert rows == expect and jobs == 1, (query, rows, jobs)
             assert "Exchange" not in executed, executed
+    # over the limit when maxPartitionBytes or the one-task ceiling is
+    # below 4 files + openCostInBytes (512k) each
     key = "spark.sql.files.maxPartitionBytes"
     saved_limit = spark.conf.get(key)
-    spark.conf.set(key, "1m")  # below 4 files + openCostInBytes (512k) each
-    try:
-        rows, jobs, executed = run(qe.query(plain, **span))
-    finally:
-        spark.conf.set(key, saved_limit)
-    assert rows == want and jobs > 1
-    assert "Exchange rangepartitioning" in executed, executed
+    for setting, ceiling in (("1m", query_module.ONE_TASK_BYTES),
+                             ("1g", 1 << 20)):
+        monkeypatch.setattr(query_module, "ONE_TASK_BYTES", ceiling)
+        spark.conf.set(key, setting)
+        try:
+            rows, jobs, executed = run(qe.query(plain, **span))
+        finally:
+            spark.conf.set(key, saved_limit)
+        assert rows == want and jobs > 1, setting
+        assert "Exchange rangepartitioning" in executed, executed
+    monkeypatch.undo()
 
     def ts(df, start, stop):
         got = qe.query(df, entries=["e1"], start=start, stop=stop).collect()
